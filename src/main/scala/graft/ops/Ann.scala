@@ -119,8 +119,8 @@ object Ann {
       sampleSize: Int = 100000): DataFrame = {
     val spark = embeds.sparkSession
     val unit = normalized(embeds).select("vec_id", "unit")
-    val train = unit.orderBy("vec_id").limit(sampleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // stored by the init collect below; every k-means round reads it
+    val train = Materialize.lazily(unit.orderBy("vec_id").limit(sampleSize))
     import spark.implicits._
     def toDf(cs: Array[(Int, Array[Double])]): DataFrame =
       cs.toSeq.toDF("cluster", "cvec")
@@ -141,7 +141,7 @@ object Ann {
       cents = toDf(next.collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
     }
-    train.unpersist()
+    Materialize.release(train)
     cents
   }
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   *     map-side combine — pair cardinality, not corpus size,
   *   - the argmax plans as TakeOrderedAndProject (no global sort),
   *   - the merge rewrite is one codegen'd pass per row.
-  * Each round's merged corpus is MATERIALIZED (lazy localCheckpoint, so
+  * Each round's merged corpus is MATERIALIZED ([[Materialize.lazily]], so
   * the round's single action — the argmax collect — doubles as the
   * materialization), and round r reads the previous round's stored
   * arrays plus ONE merge kernel — the r5 version recomputed the corpus
@@ -29,9 +29,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * dominant cost of both bpe gate queries). The superseded round's
   * blocks are freed once the next round's argmax has materialized its
   * successor. Every CheckpointEvery rounds the corpus still materializes
-  * through the engine's iterative-loop barrier (`Dedup.statsBarrier` +
-  * `freeCheckpoint`, the CC-loop pattern — a localCheckpoint re-wrap that
-  * also stops Spark 4's originStats carry-through), which bounds both the
+  * through [[Materialize.barrier]] (the CC-loop pattern — it also stops
+  * Spark 4's originStats carry-through), which bounds both the
   * logical-plan depth and the eviction-recompute depth. Result-invisible
   * (same rows), spec-pinned by the merged ≡ applyMerges equality in
   * BpeSpec past the boundary.
@@ -85,38 +84,28 @@ object Bpe {
       s"nMerges must be in [1, 4096]: $nMerges")
     graft.functions.GraftFunctions.register(tokens.sparkSession)
     // The round-0 corpus (scan + token generation + widening cast) is
-    // materialized too: round 0's argmax does it, and no later round ever
-    // re-runs the generator. LAZY localCheckpoint rather than persist(),
-    // twice deliberately: (1) the round's single argmax action still both
-    // materializes the blocks and reads them — no extra job per round;
-    // (2) persist() registers the PLAN in the session CacheManager, where
-    // an identical plan built by a later bench rep or sibling query would
-    // silently resolve to this invocation's data — cross-invocation
-    // result reuse the bench contract forbids. Checkpoint blocks are
-    // RDD-keyed: invisible to any other plan.
-    var corpus = tokens.select(col("doc_id"),
-      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
-      .localCheckpoint(false)
+    // materialized too, lazily: round 0's argmax stores it, and no later
+    // round ever re-runs the generator
+    var corpus = Materialize.lazily(tokens.select(col("doc_id"),
+      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 0
     var exhausted = false
-    var priorCp: DataFrame = null
     // the blocks the current round's corpus superseded — releasable only
     // after the next argmax action has materialized its successor (whose
     // materialization reads them)
-    var pendingRelease: DataFrame = null
+    var superseded: DataFrame = null
     while (r < nMerges && !exhausted) {
       val top = pairCounts(corpus)
         .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
         .limit(1).collect()
-      // the argmax materialized `corpus`'s blocks; its predecessor is done
-      if (pendingRelease != null) { Dedup.freeCheckpoint(pendingRelease); pendingRelease = null }
+      if (superseded != null) { Materialize.release(superseded); superseded = null }
       if (top.isEmpty) exhausted = true
       else {
         val m = Merge(r.toLong, top(0).getLong(0), top(0).getLong(1),
           top(0).getLong(2), NewIdBase + r)
         merges += m
-        pendingRelease = corpus
+        val prev = corpus
         corpus = applyMerge(corpus, m)
         r += 1
         // materialize only while another action will follow: the FINAL
@@ -124,170 +113,23 @@ object Bpe {
         // live blocks, so a single downstream consumption pays no extra
         // materialization (the last blocks strand for the session — the
         // price of a lazily-consumable result whose hot path must not
-        // re-run k kernels plus the generator; MEMORY_AND_DISK spills
-        // under pressure rather than dropping blocks). On barrier rounds
-        // the statsBarrier IS the materialization — wrapping the round in
-        // its own lazy checkpoint first would write a second
-        // corpus-sized block set only to free it unread (review-caught).
+        // re-run k kernels plus the generator). On barrier rounds the
+        // barrier IS the materialization — wrapping the round in its own
+        // lazy checkpoint first would write a second corpus-sized block
+        // set only to free it unread (review-caught).
         if (r < nMerges) {
           if (r % CheckpointEvery == 0) {
             // bound the logical-plan and eviction-recompute depth; the
-            // barrier reads the previous round's blocks through the
-            // one-kernel plan, so they are freed only after it lands
-            val (wrapped, cp) = Dedup.statsBarrier(corpus)
-            if (pendingRelease != null) { Dedup.freeCheckpoint(pendingRelease); pendingRelease = null }
-            if (priorCp != null) Dedup.freeCheckpoint(priorCp)
-            priorCp = cp
-            corpus = wrapped
-          } else corpus = corpus.localCheckpoint(false)
+            // barrier job read `prev`'s blocks, so they go now
+            corpus = Materialize.barrier(corpus)
+            Materialize.release(prev)
+          } else {
+            corpus = Materialize.lazily(corpus)
+            superseded = prev
+          }
         }
       }
     }
-    (merges.toSeq, corpus)
-  }
-
-  /** Delta-count trainer (the scale step over [[learnMerges]]): identical
-    * merge table — BpeSpec pins the equivalence at k ≥ 32 — but per-round
-    * cost tracks the CHANGED-doc set, not the corpus.
-    *
-    * [[learnMerges]] recounts every adjacent pair of every document each
-    * round: one full-corpus explode + shuffle per merge, Θ(k · corpus) —
-    * honest at gate k = 6, quadratic-ish toward a real 32k vocab. This
-    * variant maintains the pair-count table across rounds and folds in
-    * per-round DELTAS: only documents containing the merged pair can
-    * change any count (the [[graft.functions.BpePairPresent]] predicate is
-    * exactly the merge kernel's rewrite trigger), so each round
-    *   - filters the cached corpus with the early-exit native predicate
-    *     (one map-side pass, no shuffle),
-    *   - recounts pairs of the changed docs before and after the merge —
-    *     explode + shuffle over the SHRINKING changed subset only,
-    *   - folds `after − before` into the running count table (slim
-    *     (lhs, rhs, count) rows, persisted per round with the lineage cut
-    *     every [[CheckpointEvery]] rounds),
-    * and reads the next argmax from the table — the argmax action is also
-    * what materializes the previous round's fold, so a round costs TWO
-    * Spark actions total (changed-scan, argmax+fold). Exactness:
-    * unchanged docs contribute identical pair multisets before and after,
-    * so `counts ⊕ (after(changed) − before(changed))` ≡ a full recount —
-    * including the lhs = rhs greedy run-parity regime, because both sides
-    * of the delta count REAL arrays the kernel produced. As merges
-    * specialize, |changed| collapses, so late rounds cost one map-side
-    * corpus scan plus a near-empty shuffle. The merge-kernel rewrite
-    * stays one codegen'd pass per row with the same [[CheckpointEvery]]
-    * barrier discipline.
-    *
-    * WHEN TO USE WHICH (measured, BASELINE.md §bpe): on gate data the
-    * token alphabet is small, so the recount's pair shuffle collapses
-    * under map-side combine to a few thousand rows and [[learnMerges]]'s
-    * single action per round wins on job fixed costs (sf0.1 k=6, warm
-    * interleaved: 3.6s vs 5.2s). The delta trainer's per-round cost falls with round index
-    * (sf0.01 k=24: 2.9s → 0.6s as the changed set specializes) and its
-    * shuffle volume is |changed| pairs instead of the corpus — the
-    * trade that wins exactly when corpus-scale pair explosion dominates
-    * job overhead: large alphabets (real text, not mod-64 synthetics),
-    * deep vocabularies, executor-count clusters. The gate/bench queries
-    * therefore stay on [[learnMerges]]; this is the documented scale
-    * path, equivalence-pinned so the switch is a one-line swap.
-    */
-  def learnMergesDelta(tokens: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
-    require(nMerges >= 1 && nMerges <= 4096,
-      s"nMerges must be in [1, 4096]: $nMerges")
-    graft.functions.GraftFunctions.register(tokens.sparkSession)
-    // materialized per round like [[learnMerges]] (lazy localCheckpoint —
-    // same CacheManager-avoidance rationale): the changed-doc filter
-    // re-reads the corpus every round, and without the blocks that scan
-    // recomputes token generation plus r stacked kernels each time
-    var corpus = tokens.select(col("doc_id"),
-      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
-      .localCheckpoint(false)
-    var corpusPending: DataFrame = null
-    // seed counts: ONE full recount, then deltas only
-    var (counts, countsCp) = Dedup.statsBarrier(pairCounts(corpus))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    // -Dgraft.bpe.verbose=1: per-round stderr wall time + changed-doc
-    // count. Verbose is print-only — the changed.count() below runs in
-    // EVERY mode because it is load-bearing (it materializes the shared
-    // cache; see the comment at the call), so verbose runs measure the
-    // same work as silent ones.
-    val verbose = sys.props.get("graft.bpe.verbose").nonEmpty
-    var r = 0
-    var exhausted = false
-    var priorCorpusCp: DataFrame = null
-    // caches still referenced by the NOT-yet-materialized current fold:
-    // released only after the argmax action materializes it
-    var pendingCaches: List[DataFrame] = Nil
-    while (r < nMerges && !exhausted) {
-      val tRound = System.nanoTime()
-      // the argmax action ALSO materializes the previous round's persisted
-      // fold (first action to touch it) — one job does both
-      val top = counts
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      // counts is now cached: its inputs (previous counts table + changed
-      // set) are safe to release — lineage stays intact, so an eviction
-      // recomputes through them back to the last barrier
-      pendingCaches.foreach(_.unpersist())
-      pendingCaches = Nil
-      if (top.isEmpty) exhausted = true
-      else {
-        val m = Merge(r.toLong, top(0).getLong(0), top(0).getLong(1),
-          top(0).getLong(2), NewIdBase + r)
-        merges += m
-        // the delta sources: docs the kernel will rewrite, cached for the
-        // round's two recounts (before/after). Materialized HERE — the
-        // fold's union reads it twice, and two cold branches in one job
-        // would each run the full corpus scan (the round's dominant cost)
-        // in a cache race instead of sharing one pass.
-        val changed = corpus.filter(
-          call_function("bpe_pair_present", col("tokens"), lit(m.lhs), lit(m.rhs)))
-          .persist()
-        val nChanged = changed.count()
-        // that count read the full corpus, materializing this round's
-        // corpus blocks — its predecessor is done
-        if (corpusPending != null) { Dedup.freeCheckpoint(corpusPending); corpusPending = null }
-        if (verbose)
-          System.err.println(f"[graft] bpe round=$r lhs=${m.lhs} rhs=${m.rhs} " +
-            f"count=${m.pair_count} changed_docs=$nChanged " +
-            f"secs=${(System.nanoTime() - tRound) / 1e9}%.3f")
-        val before = pairCounts(changed)
-          .select(col("lhs"), col("rhs"), (-col("pair_count")).as("pair_count"))
-        val after = pairCounts(applyMerge(changed, m))
-        val folded = counts.unionAll(before).unionAll(after)
-          .groupBy("lhs", "rhs")
-          .agg(sum("pair_count").as("pair_count"))
-          .filter(col("pair_count") =!= 0)
-          .persist() // materialized by the NEXT argmax — no extra action
-        pendingCaches = List(counts, changed)
-        counts = folded
-        corpusPending = corpus
-        corpus = applyMerge(corpus, m)
-        r += 1
-        // same final-round / strand / barrier-is-the-materialization
-        // posture as [[learnMerges]]
-        if (r < nMerges) {
-          if (r % CheckpointEvery == 0) {
-            // cut both lineages: the corpus kernel stack (Θ(k²) recompute
-            // otherwise) and the counts union chain (plan + originStats
-            // growth); the barrier materializes the pending fold, after
-            // which every cache behind it is releasable
-            val (wrappedCounts, cCp) = Dedup.statsBarrier(counts)
-            counts.unpersist()
-            pendingCaches.foreach(_.unpersist())
-            pendingCaches = Nil
-            Dedup.freeCheckpoint(countsCp)
-            counts = wrappedCounts; countsCp = cCp
-            val (wrapped, cp) = Dedup.statsBarrier(corpus)
-            if (corpusPending != null) { Dedup.freeCheckpoint(corpusPending); corpusPending = null }
-            if (priorCorpusCp != null) Dedup.freeCheckpoint(priorCorpusCp)
-            priorCorpusCp = cp
-            corpus = wrapped
-          } else corpus = corpus.localCheckpoint(false)
-        }
-      }
-    }
-    counts.unpersist()
-    pendingCaches.foreach(_.unpersist())
-    Dedup.freeCheckpoint(countsCp)
     (merges.toSeq, corpus)
   }
 

@@ -194,22 +194,18 @@ object Sampling {
 
     // phase 1: stratum sizes as a DISTRIBUTED slim aggregate (null strata
     // included — Spark groups them); the driver never materializes the
-    // stratum list, only scalar counts. The frame rides a LAZY local
-    // checkpoint whose materialization IS the broadcast-vs-shuffle
+    // stratum list, only scalar counts. The frame is materialized
+    // LAZILY, and its materialization IS the broadcast-vs-shuffle
     // strategy probe: ONE job computes the aggregate, stores it, and
     // returns the stratum count — r5 ran the probe as its own
     // full-aggregate job and then recomputed the aggregate again in
     // every deficit check AND in the returned plan (three computations
     // of the same frame; judge-flagged as corpus_sample's 2.3× record
-    // regression). Checkpoint, not persist(): a persist entry is
-    // plan-keyed in the CacheManager, where an identical plan from a
-    // later bench rep would silently reuse this invocation's data. The
-    // blocks are slim and stratum-bounded (the same frame the ≤ 2^20
-    // branch broadcasts) and stay live for the session so the returned
-    // plan reads them too.
-    val counts = slim.groupBy(col(keyCol).as("s_key"))
-      .agg(count(lit(1)).as("s_cnt"))
-      .localCheckpoint(false)
+    // regression). The blocks are slim and stratum-bounded (the same
+    // frame the ≤ 2^20 branch broadcasts) and stay live for the session
+    // so the returned plan reads them too.
+    val counts = Materialize.lazily(slim.groupBy(col(keyCol).as("s_key"))
+      .agg(count(lit(1)).as("s_cnt")))
     val nStrata = counts.count()
 
     // initial cutoff: expected n-th order statistic + generous slack
@@ -239,18 +235,17 @@ object Sampling {
     // `cut` twice), so an un-barriered loop would grow the lineage
     // ~3× per round — the exact iterative-loop pathology the CC trainer
     // documents. Every widened cutoff therefore passes through
-    // Dedup.statsBarrier (the slim table materializes, lineage cut);
+    // Materialize.barrier (the slim table materializes, lineage cut);
     // superseded barrier blocks are freed, the final one stays live for
     // the returned plan (CC-loop posture).
     // the candidate set is small by construction (~n + slack rows per
-    // stratum), so it is materialized eagerly (localCheckpoint) and BOTH
-    // the deficit check and the returned ranking plan read the blocks —
+    // stratum), so it is materialized eagerly and BOTH the deficit check
+    // and the returned ranking plan read the blocks —
     // r5 recomputed the full docs-side join once for the check and again
     // for the consumer. Superseded candidate checkpoints are freed as the
     // loop widens; the final one stays live for the returned plan.
-    var candidates = candidatesFor(cut).localCheckpoint(true)
+    var candidates = Materialize.eager(candidatesFor(cut))
     var deficit = true
-    var priorCp: DataFrame = null
     while (deficit) {
       val got = candidates.groupBy(col(keyCol).as("g_key"))
         .agg(count(lit(1)).as("g_cnt"))
@@ -267,12 +262,12 @@ object Sampling {
         // materialize the widened cutoffs FIRST (their plan reads the old
         // candidates through `short`), only then free the superseded
         // candidate blocks and rebuild candidates under the new cutoffs
-        val (wrapped, cp) = Dedup.statsBarrier(widened)
-        if (priorCp != null) Dedup.freeCheckpoint(priorCp)
-        priorCp = cp
-        cut = wrapped
-        Dedup.freeCheckpoint(candidates)
-        candidates = candidatesFor(cut).localCheckpoint(true)
+        // (the first `cut` is a plan over `counts`, which release leaves)
+        val prevCut = cut
+        cut = Materialize.barrier(widened)
+        Materialize.release(prevCut)
+        Materialize.release(candidates)
+        candidates = Materialize.eager(candidatesFor(cut))
       }
     }
 

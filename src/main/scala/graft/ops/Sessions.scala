@@ -80,11 +80,10 @@ object Sessions {
     // frontier filters below are subsets of this isin), three slim
     // columns, materialized eagerly so the k(k+1)/2 downstream plan
     // references never re-touch the source
-    val base = events.filter(col("user_id").isNotNull)
+    val base = Materialize.eager(events.filter(col("user_id").isNotNull)
       .filter(col("event_type").isin(stages: _*))
       .select(col("user_id"),
-        col("event_type"), unix_micros(col("ts").cast("timestamp")).as("t"))
-      .localCheckpoint(true)
+        col("event_type"), unix_micros(col("ts").cast("timestamp")).as("t")))
     // frontier i = users who completed stages 0..i, with every completion
     // time t0..ti carried along; users drop out of the chain at their
     // first missed (or not-later) stage
@@ -128,12 +127,11 @@ object Sessions {
     val hourUs = 3600L * 1000000L
     // integral `div` (never a double divide — a quotient one ulp under a
     // bucket boundary would truncate into the wrong hour)
-    val active = events
+    val active = Materialize.eager(events
       .select(col("user_id"),
         expr(s"(unix_micros(cast(ts AS timestamp)) div ${hourUs}L) * ${hourUs}L")
           .as("hour_us"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val next = active.select(col("user_id"),
       (col("hour_us") - hourUs).as("hour_us"))
     active.join(next, Seq("user_id", "hour_us"), "left_semi")

@@ -95,44 +95,78 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("learnMerges matches the pure-Scala reference trainer, ranks and counts") {
-    // crafted corpus with count ties (resolved by the (count, lhs, rhs)
-    // total order) and a run of equal tokens
-    val corpus = Seq(
-      0L -> Seq(1L, 2, 1, 2, 3, 3, 3, 1, 2),
-      1L -> Seq(2L, 1, 2, 1, 2, 3),
-      2L -> Seq(3L, 3, 3, 3, 1, 2),
-      3L -> Seq(7L, 8, 7, 8, 7, 8))
-    val df = corpus.toDF("doc_id", "tokens")
-    val (got, merged) = Bpe.learnMerges(df, 5)
-    val want = refLearn(corpus.map(_._2), 5)
-    assert(got == want)
-    // and the merged corpus matches the reference fold applied in order
-    val gotCorpus = merged.as[(Long, Seq[Long])].collect().toMap
-    val wantCorpus = corpus.map { case (id, t) =>
-      id -> want.foldLeft(t)((acc, m) => refMerge(acc, m.lhs, m.rhs, m.new_id))
-    }.toMap
-    assert(gotCorpus == wantCorpus)
-  }
-
-  test("learnMerges crosses the checkpoint barrier result-invisibly") {
-    // past CheckpointEvery rounds the loop re-bases the corpus on a
-    // statsBarrier localCheckpoint (bounding the Θ(k²) kernel-stack
-    // recompute); the learned table and the merged corpus must be
-    // bit-identical to the pure-Scala reference across that boundary
-    val rnd = new scala.util.Random(7)
-    val corpus = Seq.tabulate(30)(i =>
-      i.toLong -> Seq.fill(30)(rnd.nextInt(4).toLong))
-    val df = corpus.toDF("doc_id", "tokens")
-    val k = Bpe.CheckpointEvery + 2
-    val (got, merged) = Bpe.learnMerges(df, k)
-    assert(got.size == k) // the data sustained every round; no early stop
+  /** learnMerges over `corpus` ≡ refLearn: merge table and merged corpus. */
+  private def assertMatchesRef(corpus: Seq[(Long, Seq[Long])], k: Int): Seq[Bpe.Merge] = {
+    val (got, merged) = Bpe.learnMerges(corpus.toDF("doc_id", "tokens"), k)
     assert(got == refLearn(corpus.map(_._2), k))
     val gotCorpus = merged.as[(Long, Seq[Long])].collect().toMap
     val wantCorpus = corpus.map { case (id, t) =>
       id -> got.foldLeft(t)((acc, m) => refMerge(acc, m.lhs, m.rhs, m.new_id))
     }.toMap
     assert(gotCorpus == wantCorpus)
+    got
+  }
+
+  test("learnMerges matches the pure-Scala reference trainer, ranks and counts") {
+    // crafted corpus with count ties (resolved by the (count, lhs, rhs)
+    // total order) and a run of equal tokens
+    val crafted = Seq(
+      0L -> Seq(1L, 2, 1, 2, 3, 3, 3, 1, 2),
+      1L -> Seq(2L, 1, 2, 1, 2, 3),
+      2L -> Seq(3L, 3, 3, 3, 1, 2),
+      3L -> Seq(7L, 8, 7, 8, 7, 8))
+    assert(assertMatchesRef(crafted, 5).size == 5)
+    // a corpus that runs out of pairs stops at the same round as the
+    // reference, with the same table
+    val tiny = Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L))
+    assert(assertMatchesRef(tiny, 5).size == 1)
+  }
+
+  test("learnMerges crosses the checkpoint barrier result-invisibly") {
+    // past CheckpointEvery rounds the loop re-bases the corpus on a
+    // Materialize.barrier (bounding the Θ(k²) kernel-stack recompute);
+    // the learned table and the merged corpus must be bit-identical to
+    // the pure-Scala reference across that boundary
+    val rnd = new scala.util.Random(7)
+    val random = Seq.tabulate(30)(i =>
+      i.toLong -> Seq.fill(30)(rnd.nextInt(4).toLong))
+    val k = Bpe.CheckpointEvery + 2
+    // the data sustains every round; no early stop
+    assert(assertMatchesRef(random, k).size == k)
+    // 32 rounds (three barriers) over long equal-token runs: the lhs = rhs
+    // run-parity regime must stay exact across every barrier
+    val runsRnd = new scala.util.Random(23)
+    val runs = Seq.tabulate(40) { i =>
+      i.toLong -> Seq.fill(10 + runsRnd.nextInt(8)) {
+        val sym = runsRnd.nextInt(5).toLong
+        Seq.fill(1 + runsRnd.nextInt(4))(sym)
+      }.flatten
+    }
+    val deep = assertMatchesRef(runs, 32)
+    assert(deep.size == 32, "corpus must sustain all 32 rounds for the claim to bind")
+    assert(deep.exists(m => m.lhs == m.rhs),
+      "the equal-pair regime must be exercised — regenerate the corpus if this trips")
+  }
+
+  test("learnMerges releases every superseded checkpoint, barrier rounds included") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(5)
+    val df = Seq.tabulate(30)(i => i.toLong -> Seq.fill(30)(rnd.nextInt(4).toLong))
+      .toDF("doc_id", "tokens")
+    val before = sc.getPersistentRDDs.keySet
+    val (merges, merged) = Bpe.learnMerges(df, Bpe.CheckpointEvery + 4)
+    assert(merges.size == Bpe.CheckpointEvery + 4)
+    // stored RDDs the returned plan reads: its scan leaves and their lineage
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      r.dependencies.map(d => lineage(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
+    val read = merged.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => lineage(l.rdd)
+    }.flatten.toSet
+    val held = sc.getPersistentRDDs.keySet -- before
+    val cached = sc.getRDDStorageInfo.map(_.id).toSet -- before
+    // exactly the last round's blocks stay; the round-8 barrier's are gone
+    assert(held.size == 1 && held.subsetOf(read), s"held $held, plan reads $read")
+    assert(cached.subsetOf(held), s"cached $cached, held $held")
   }
 
   test("applyMerges replays a learned table onto a fresh scan bit-identically") {
@@ -152,71 +186,6 @@ class BpeSpec extends AnyFunSuite {
     val (merges, _) = Bpe.learnMerges(toks, 6)
     assert(merges.size == 6)
     assert(merges.forall(m => m.lhs != m.rhs), merges.toString)
-  }
-
-  test("bpe_pair_present kernel ≡ adjacency check; exactly the merge kernel's rewrite trigger") {
-    graft.functions.GraftFunctions.register(spark)
-    val rnd = new scala.util.Random(11)
-    val cases = Seq.tabulate(80) { i =>
-      (i.toLong, Seq.fill(rnd.nextInt(20))(rnd.nextInt(3).toLong))
-    }
-    val df = cases.toDF("doc_id", "tokens")
-    for (a <- 0L to 2L; b <- 0L to 2L) {
-      val got = df
-        .select($"doc_id",
-          call_function("bpe_pair_present", $"tokens", lit(a), lit(b)).as("p"),
-          call_function("bpe_merge", $"tokens", lit(a), lit(b), lit(9999L)).as("m"),
-          $"tokens")
-        .as[(Long, Boolean, Seq[Long], Seq[Long])].collect()
-      got.foreach { case (id, present, merged, orig) =>
-        // independent adjacency reference
-        val want = orig.indices.dropRight(1).exists(j => orig(j) == a && orig(j + 1) == b)
-        assert(present == want, s"doc $id pair ($a,$b)")
-        // soundness coupling for the delta trainer's changed-doc filter:
-        // the kernel rewrites a row IFF the predicate holds
-        assert(present == (merged != orig), s"doc $id pair ($a,$b): trigger mismatch")
-      }
-    }
-  }
-
-  test("learnMergesDelta ≡ learnMerges at k = 32 (merge table and corpus), incl. lhs = rhs rounds") {
-    // corpus engineered to sustain 32 merges and to hit the lhs = rhs
-    // run-parity regime (long equal runs) — the delta fold must stay exact
-    // through both, because each side of the delta counts REAL kernel
-    // output arrays
-    val rnd = new scala.util.Random(23)
-    val corpus = Seq.tabulate(40) { i =>
-      val runs = Seq.fill(10 + rnd.nextInt(8)) {
-        val sym = rnd.nextInt(5).toLong
-        Seq.fill(1 + rnd.nextInt(4))(sym)
-      }
-      i.toLong -> runs.flatten
-    }
-    val df = corpus.toDF("doc_id", "tokens")
-    val k = 32
-    val (full, fullCorpus) = Bpe.learnMerges(df, k)
-    val (delta, deltaCorpus) = Bpe.learnMergesDelta(df, k)
-    assert(full.size == k, "corpus must sustain all 32 rounds for the claim to bind")
-    assert(delta == full)
-    assert(full.exists(m => m.lhs == m.rhs),
-      "the equal-pair regime must be exercised — regenerate the corpus if this trips")
-    val a = fullCorpus.as[(Long, Seq[Long])].collect().toMap
-    val b = deltaCorpus.as[(Long, Seq[Long])].collect().toMap
-    assert(a == b)
-  }
-
-  test("learnMergesDelta matches the reference trainer on the gate source and early-stops exactly") {
-    val toks = graft.sources.Tokens.fromDocuments(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"tokens").limit(60)
-    val (full, _) = Bpe.learnMerges(toks, 6)
-    val (delta, _) = Bpe.learnMergesDelta(toks, 6)
-    assert(delta == full)
-    // exhaustion parity: a tiny corpus that runs out of pairs stops both
-    // trainers at the same round with the same table
-    val tiny = Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L)).toDF("doc_id", "tokens")
-    val (f2, _) = Bpe.learnMerges(tiny, 5)
-    val (d2, _) = Bpe.learnMergesDelta(tiny, 5)
-    assert(d2 == f2 && d2.size == 1)
   }
 
   test("long_checksum ≡ SQL positional fold and token_checksum congruence") {
