@@ -55,7 +55,7 @@ object Ann {
     val c = normalized(corpus).select(col("vec_id").as("nbr_id"), col("unit").as("nbr_unit"))
     val p = normalized(probes).select(col("vec_id").as("probe_id"), col("unit").as("probe_unit"))
     val w = Window.partitionBy("probe_id").orderBy(col("cosine").desc, col("nbr_id"))
-    p.join(c, col("probe_id") =!= col("nbr_id")) // broadcast(p) chosen by Catalyst/AQE
+    p.join(c, col("probe_id") =!= col("nbr_id")) // Catalyst/AQE broadcasts p
       .withColumn("cosine", dot(col("probe_unit"), col("nbr_unit")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -196,12 +196,14 @@ object Dedup {
     * n_chars) equality — kept as the PORTABLE oracle form of the verify
     * stage (both engines can replay it exactly); the production wiring is
     * [[verifiedPairs]], which verifies LSH candidates instead of a
-    * group-gated cross product.
+    * group-gated cross product. Both sides of the self-join grow with
+    * the corpus, so the `b` side is pinned SHUFFLE_HASH: no count, and
+    * never a broadcast of a corpus-sized gram table.
     */
   def ngramJaccard(docs: DataFrame): DataFrame = {
     val grams = trigrams(docs).select("doc_id", "lang", "n_chars", "grams")
     grams.as("a")
-      .join(grams.as("b"),
+      .join(grams.as("b").hint("SHUFFLE_HASH"),
         col("a.lang") === col("b.lang") &&
           col("a.n_chars") === col("b.n_chars") &&
           col("a.doc_id") < col("b.doc_id"))

@@ -162,9 +162,9 @@ object Sampling {
     * one reducer each — at 100 TB a stratum is billions of rows. This
     * runs two-phase instead: (1) per-stratum counts as a DISTRIBUTED
     * slim aggregate — the cutoff is a (stratum, cutoff) lookup table
-    * joined in (broadcast under the usual 2^20-key limit, SHUFFLE_HASH
-    * past it; null strata via null-safe equality), never a chained
-    * literal expression, so plan size and driver memory stay O(1) at any
+    * joined in (its side through [[graft.util.Joins.keySide]]; null
+    * strata via null-safe equality), never a chained literal
+    * expression, so plan size and driver memory stay O(1) at any
     * stratum cardinality (r4 review item — the driver sees only scalar
     * counts);
     * (2) a hash-cutoff prefilter keeps ~n + slack candidates per stratum
@@ -202,7 +202,7 @@ object Sampling {
     // every deficit check AND in the returned plan (three computations
     // of the same frame; judge-flagged as corpus_sample's 2.3× record
     // regression). The blocks are slim and stratum-bounded (the same
-    // frame the ≤ 2^20 branch broadcasts) and stay live for the session
+    // frame the cutoff join broadcasts) and stay live for the session
     // so the returned plan reads them too.
     val counts = Materialize.lazily(slim.groupBy(col(keyCol).as("s_key"))
       .agg(count(lit(1)).as("s_cnt")))
@@ -217,12 +217,10 @@ object Sampling {
           ceil(lit(KeySpace.toDouble) * slackRows / col("s_cnt")).cast("long"))))
 
     // the cutoff lookup joins against the data null-safely (a null
-    // stratum is its own group); broadcast while the table is small,
-    // hashed shuffle past the usual key limit — never a literal
+    // stratum is its own group), its side count-guarded — never a literal
     // case-chain (plan size was linear in stratum cardinality)
     def candidatesFor(c: DataFrame): DataFrame = {
-      val side = if (nStrata <= (1L << 20)) broadcast(c) else c.hint("SHUFFLE_HASH")
-      slim.join(side, col(keyCol) <=> col("s_key"))
+      slim.join(graft.util.Joins.keySide(c, nStrata), col(keyCol) <=> col("s_key"))
         .filter(col("sample_key") < col("s_cut"))
         .select(col("doc_id"), col(keyCol), col("sample_key"))
     }

@@ -276,36 +276,35 @@ object TextOps {
   /** Benchmark DECONTAMINATION: flag corpus docs that share word n-grams
     * with an evaluation set, so they can be dropped before training leaks
     * the benchmark. `probes` is (probe_id, text) — an eval set is small by
-    * construction, so its exploded distinct grams are BROADCAST; the
-    * corpus side streams map-side through the hash join and only slim
-    * (doc_id, probe_id) hits cross the one aggregation shuffle. Returns
-    * (doc_id, probe_id, shared_grams = distinct n-grams in common), rows
+    * construction, so its exploded distinct grams are BROADCAST (below
+    * [[graft.util.Joins.BroadcastRows]]); the corpus side streams
+    * map-side through the hash join and only slim (doc_id, probe_id)
+    * hits cross the one aggregation shuffle. Returns (doc_id, probe_id,
+    * shared_grams = distinct n-grams in common), rows
     * with shared_grams ≥ minShared. Exact and deterministic, so an
     * external SQL engine replays it verbatim.
     */
   def contamination(docs: DataFrame, probes: DataFrame, n: Int = 3,
-      minShared: Long = 1, broadcastGramLimit: Long = 1L << 20): DataFrame = {
+      minShared: Long = 1): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1: $n")
     def explodedGrams(df: DataFrame, idCol: String) = df
       .withColumn("words", split(col("text"), " "))
       .select(col(idCol), explode(expr(gramsSql(n))).as("gram"))
-    // size-guarded broadcast (same pattern as the manifest reader),
-    // bounding the EXPLODED gram rows — the relation actually broadcast —
-    // not the probe doc count (90k long docs under a doc bound could still
-    // explode to hundreds of millions of gram rows). The bound is the
-    // per-doc gram-count UPPER bound (words − n + 1 ≥ distinct grams),
-    // computed in one cheap pass over probe word counts: sound for the
-    // guard, and it avoids both a second evaluation of the gram pipeline
-    // and a cache the caller could never unpersist. Past the limit the
-    // join degrades to a plain shuffle on gram instead of failing.
+    // count-guarded side (Joins.keySide), bounding the EXPLODED gram rows
+    // — the relation actually broadcast — not the probe doc count (90k
+    // long docs under a doc bound could still explode to hundreds of
+    // millions of gram rows). The bound is the per-doc gram-count UPPER
+    // bound (words − n + 1 ≥ distinct grams), computed in one cheap pass
+    // over probe word counts: sound for the guard, and it avoids both a
+    // second evaluation of the gram pipeline and a cache the caller could
+    // never unpersist.
     val gramBound = probes
       .select(greatest(lit(1), size(split(col("text"), " ")) - (n - 1))
         .cast("long").as("g"))
       .agg(coalesce(sum("g"), lit(0L))).collect()(0).getLong(0)
-    val pg = explodedGrams(probes, "probe_id")
-    val probeSide = if (gramBound <= broadcastGramLimit) broadcast(pg) else pg
     explodedGrams(docs, "doc_id")
-      .join(probeSide, Seq("gram"))
+      .join(graft.util.Joins.keySide(explodedGrams(probes, "probe_id"), gramBound),
+        Seq("gram"))
       .groupBy("doc_id", "probe_id")
       .agg(count(lit(1)).as("shared_grams"))
       .filter(col("shared_grams") >= minShared)

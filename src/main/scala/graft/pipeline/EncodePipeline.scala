@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.functions.GraftFunctions
 import graft.sinks.ManifestSink
+import graft.util.Joins
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,9 +30,9 @@ import org.apache.spark.storage.StorageLevel
   *    stay uniform regardless of skew;
   *  - resume/commit are metadata-only operations against a manifest dataset
   *    that Spark writes distributed (no driver-side collect of partitions);
-  *    the committed-key side of the resume anti-join broadcasts only below
-  *    a size threshold — beyond it (thousands of runs at 100 TB) it
-  *    degrades gracefully to a shuffle join.
+  *    the committed-key side of the resume anti-join goes through
+  *    [[graft.util.Joins.keySide]] — broadcast below its row bound, a
+  *    shuffled hash join past it (thousands of runs at 100 TB).
   *
   * Resume contract: part_keys are positional bins over a cumulative-sum
   * window, so they are only stable across runs if the input snapshot is
@@ -78,8 +79,6 @@ object EncodePipeline {
                                      // blobs: the lightweight codecs expose
                                      // cross-row structure zstd exploits
                                      // (0.71 B/tok vs 1.42 for zstd on raw)
-      broadcastKeyLimit: Long = 1L << 20, // key-table rows above this use a
-                                          // shuffle join, not a broadcast
       strictResume: Boolean = true,       // fail-fast if a skipped part_key's
                                           // doc count drifted from the manifest
       label: String = "",     // K4/K5 user chunk label (reference
@@ -158,7 +157,6 @@ object EncodePipeline {
       require(targetBinTokens > 0, s"targetBinTokens must be positive: $targetBinTokens")
       require(saltBuckets >= 0, s"saltBuckets must be >= 0 (0 = auto): $saltBuckets")
       require(maxPartitionsPerRun > 0, s"maxPartitionsPerRun must be positive")
-      require(broadcastKeyLimit > 0, s"broadcastKeyLimit must be positive")
       require(!partPrefix.contains("/"),
         s"partPrefix must not contain '/' (it is a part_key segment): '$partPrefix'")
       val codecs = Set("zstd", "lz4", "snappy", "gzip", "lzo", "brotli", "none", "uncompressed")
@@ -192,7 +190,7 @@ object EncodePipeline {
         s""""target_partitions":$targetPartitions,""" +
         s""""salt_buckets":$resolvedSalts,"max_partitions_per_run":$maxPartitionsPerRun,""" +
         s""""part_prefix":"${esc(partPrefix)}","parquet_codec":"$parquetCodec",""" +
-        s""""broadcast_key_limit":$broadcastKeyLimit,"strict_resume":$strictResume,""" +
+        s""""strict_resume":$strictResume,""" +
         s""""overwrite":$overwrite,""" +
         s""""label":"${esc(label)}",""" +
         s""""sort_columns":[${sortColumns.map(c => "\"" + esc(c) + "\"").mkString(",")}],""" +
@@ -271,23 +269,6 @@ object EncodePipeline {
     if (cfg.label.nonEmpty) concat_ws("__", stub, lit(cfg.label)) else stub
   }
 
-  /** Resume anti-join with a size-guarded broadcast: the committed-key set
-    * grows without bound over a sink's lifetime (thousands of runs at
-    * 100 TB would blow the broadcast limit), so past `limit` rows the
-    * anti-join degrades to a shuffle join against the partition-pruned
-    * manifest. Exposed for plan-level tests (PlanSpec asserts both
-    * strategies).
-    */
-  def resumeAntiJoin(plannedKeys: DataFrame, committedKeys: DataFrame,
-      nCommitted: Long, limit: Long): DataFrame = {
-    // the MERGE hint pins the large-side strategy: without it Spark's size
-    // estimate of the (slim) key table could re-introduce the broadcast
-    val side =
-      if (nCommitted <= limit) broadcast(committedKeys)
-      else committedKeys.hint("MERGE")
-    plannedKeys.join(side, Seq("part_key"), "left_anti")
-  }
-
   /** Execute one run: encode + commit all not-yet-committed partitions
     * (bounded by cfg.maxPartitionsPerRun). Returns the run summary.
     */
@@ -327,16 +308,6 @@ object EncodePipeline {
 
   private def runGuarded(spark: SparkSession, tokens0: DataFrame, cfg: Config,
       runId: String, t0: Long): RunSummary = {
-    // phase timing behind -Dgraft.pipeline.verbose: stderr-only, and the
-    // one behavior change (an extra materializing count on the encoded
-    // cache, to split encode cost from write cost) happens only when on
-    val verbose = sys.props.get("graft.pipeline.verbose").nonEmpty
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (verbose) {
-      val now = System.nanoTime()
-      System.err.println(f"[graft] pipeline phase=$name secs=${(now - tPhase) / 1e9}%.2f")
-      tPhase = now
-    }
     // F6 batch reorg guard: docs within `reorgBuffer` of the input head
     // (max doc_id) are excluded from this run's plan and counted as
     // deferred — the batch analog of the reference's
@@ -362,7 +333,6 @@ object EncodePipeline {
         }
       }
 
-    phase("reorg_guard")
     // part_keys are positional (source, salt, bin) coordinates: every run
     // against this sink must use the same geometry or identical docs land
     // under fresh keys and resume sees nothing to skip (silent dupes).
@@ -410,7 +380,6 @@ object EncodePipeline {
         (s, b)
     }
 
-    phase("salt_resolve")
     // CURRENT view (latest run per part_key): on an append-only sink this
     // is the committed manifest verbatim; after an overwrite it is the
     // supersession view, so the drift guard below compares against the
@@ -423,7 +392,6 @@ object EncodePipeline {
     // plan/skip/limit accounting and the key join never re-derive the
     // input; the heavy arrays are read exactly once per run, in the encode
     // pass (the reference's plan-then-collect shape, freeze.rs:26-125).
-    phase("committed_read")
     val plannedParts = plan(tokens, cfg, salts, binTokens).persist(StorageLevel.MEMORY_AND_DISK)
     val plannedKeys = plannedParts.select("part_key").distinct()
     val nPlanned = plannedKeys.count()
@@ -432,7 +400,6 @@ object EncodePipeline {
     // the re-committed keys supersede via the reader's latest-run-per-key
     // resolution, so no anti-join and no drift guard (re-encoding after an
     // input/config change is the point)
-    phase("plan_persist")
     if (cfg.overwrite && nCommitted > 0) {
       // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
       // so a committed key absent from the new plan would silently stay
@@ -465,10 +432,12 @@ object EncodePipeline {
             "sink (re-run with the matching partPrefix).")
       }
     }
+    // the committed-key set grows without bound over a sink's lifetime,
+    // so its side of the anti-join is count-guarded
     var todoKeys =
       if (cfg.overwrite) plannedKeys
-      else resumeAntiJoin(plannedKeys, committedKeysDf, nCommitted,
-        cfg.broadcastKeyLimit)
+      else plannedKeys.join(Joins.keySide(committedKeysDf, nCommitted),
+        Seq("part_key"), "left_anti")
     // fresh sink (nothing committed): the anti-join is an identity, so the
     // todo count equals the planned count — skip the extra job
     val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
@@ -516,10 +485,7 @@ object EncodePipeline {
         0L, wallMs, ManifestSink.readErrorReports(cfg.outDir).size.toLong,
         nDeferred)
     }
-    val todoSide =
-      if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
-        broadcast(todoKeys)
-      else todoKeys
+    val todoSide = Joins.keySide(todoKeys, math.min(nTodo, cfg.maxPartitionsPerRun.toLong))
 
     // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
     // exchange (the doc_id join against the slim key table); encoding runs
@@ -555,8 +521,6 @@ object EncodePipeline {
       .repartition(col("part_key"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    phase("resume_join")
-    if (verbose) { encoded.count(); phase("encode_materialize") }
     // failure-safe cache cleanup: the slim/manifest persists happen inside
     // the try; without these refs a throw between persist and totals would
     // strand their blocks for the session's lifetime (runAll/streaming/
@@ -579,7 +543,6 @@ object EncodePipeline {
         .option("compression", cfg.parquetCodec)
         .parquet(ManifestSink.dataDir(cfg.outDir))
 
-      phase("data_write")
       // per-partition lineage + metrics rows (reports.rs / summaries.rs
       // analog). ONE scan of the encoded cache produces a slim
       // per-(part_key, task, codec) intermediate; the manifest rows, the
@@ -634,7 +597,6 @@ object EncodePipeline {
         .write.mode("append").partitionBy("run_id")
         .parquet(ManifestSink.manifestDir(cfg.outDir))
 
-      phase("manifest_write")
       val totals = manifest.agg(
         count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
         coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
@@ -663,7 +625,6 @@ object EncodePipeline {
             "not committing (data stays invisible). Re-run to resume.")
       }
 
-      phase("totals_pin")
       // atomic publish — everything above is invisible until this succeeds
       ManifestSink.commitRun(cfg.outDir, runId,
         summaryJson(summary, cfg, salts, binTokens))

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Joins
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -91,25 +92,35 @@ object ManifestSink {
     f"run-${maxIdx + 1}%05d-${java.util.UUID.randomUUID.toString.take(8)}"
   }
 
-  /** Above this many committed runs the manifest filter switches from a
-    * static `isin` literal (O(runs) expression tree) to a semi-join
-    * against a runs DataFrame.
+  /** Above this many run ids [[filterRuns]] switches from a static `isin`
+    * literal (O(runs) expression tree) to a semi-join against a runs
+    * DataFrame.
     */
   val IsinRunLimit: Int = 64
 
-  /** Committed manifest rows (lineage + metrics table; reference K9/K10).
+  /** Rows of `df` whose `run_id` is one of `runs`, column order kept.
     *
-    * Size-guarded run filter: a short run list — the common case — prunes
-    * run_id partition dirs with a static `isin` literal; past
-    * [[IsinRunLimit]] runs that literal In-tree grows O(runs) (a
+    * Size-guarded: a short run list — the common case — is a static
+    * `isin` literal (on a run_id-partitioned dataset it prunes dirs);
+    * past [[IsinRunLimit]] runs that literal In-tree grows O(runs) (a
     * plan-size/analysis killer at thousands of runs), so the filter
-    * becomes a semi-join against a runs DataFrame instead. The runs side
-    * is one short string per run — broadcastable at any realistic run
-    * count — and run_id stays a partition column, so the join still
-    * prunes dirs dynamically.
+    * becomes a semi-join against a runs DataFrame whose side goes through
+    * [[Joins.keySide]]. run_id stays a partition column, so the join
+    * still prunes dirs dynamically.
     */
-  def committedManifest(spark: SparkSession, root: String,
-      isinRunLimit: Int = IsinRunLimit): DataFrame = {
+  private[graft] def filterRuns(df: DataFrame, runs: Seq[String]): DataFrame =
+    if (runs.size <= IsinRunLimit) df.filter(col("run_id").isin(runs: _*))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      df.join(Joins.keySide(runs.toDF("run_id"), runs.size), Seq("run_id"), "left_semi")
+        .select(df.columns.map(col): _*)
+    }
+
+  /** Committed manifest rows (lineage + metrics table; reference K9/K10),
+    * run-filtered by [[filterRuns]].
+    */
+  def committedManifest(spark: SparkSession, root: String): DataFrame = {
     val runs = committedRunIds(root)
     if (runs.isEmpty) {
       import org.apache.spark.sql.types._
@@ -121,16 +132,7 @@ object ManifestSink {
         StructField("encoded_bytes", LongType), StructField("codec", StringType),
         StructField("wall_ms", LongType)))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else if (runs.size <= isinRunLimit) {
-      // run_id is a partition dir of the manifest dataset -> pruned scan
-      spark.read.parquet(manifestDir(root))
-        .filter(col("run_id").isin(runs: _*))
-    } else {
-      import spark.implicits._
-      val runsDf = runs.toDF("run_id")
-      spark.read.parquet(manifestDir(root))
-        .join(broadcast(runsDf), Seq("run_id"), "left_semi")
-    }
+    } else filterRuns(spark.read.parquet(manifestDir(root)), runs)
   }
 
   /** CURRENT manifest rows: per part_key, the row of the latest committed
@@ -144,9 +146,8 @@ object ManifestSink {
     * two runs collide on (part_key, run_id) — the struct max tie-breaks on
     * the remaining columns field-by-field.
     */
-  def currentManifest(spark: SparkSession, root: String,
-      isinRunLimit: Int = IsinRunLimit): DataFrame = {
-    val man = committedManifest(spark, root, isinRunLimit)
+  def currentManifest(spark: SparkSession, root: String): DataFrame = {
+    val man = committedManifest(spark, root)
     // run_id leads the struct so the max ranks on it first
     val valCols = ManifestSchemaCols.filterNot(c => c == "part_key" || c == "run_id")
     man.groupBy("part_key")
@@ -235,14 +236,11 @@ object ManifestSink {
     *
     * Size-guarded like the resume anti-join (both directions of
     * freeze.rs:96-109's skip-existing semantics): the committed pair set
-    * grows without bound over a sink's lifetime, so past
-    * `broadcastKeyLimit` pairs the semi-join degrades from a broadcast to
-    * a SHUFFLE_HASH join — hash side is still the slim key table, and the
-    * heavy blob side is never sorted (an SMJ here would sort the arrays:
-    * the documented 4× pipeline regression).
+    * grows without bound over a sink's lifetime, so its side is counted
+    * and goes through [[Joins.keySide]] — the hash side is always the slim
+    * key table and the heavy blob side is never sorted.
     */
-  def readCommitted(spark: SparkSession, root: String,
-      broadcastKeyLimit: Long = 1L << 20): DataFrame = {
+  def readCommitted(spark: SparkSession, root: String): DataFrame = {
     val committed = currentManifest(spark, root).select("part_key", "run_id")
     if (!Files.isDirectory(Paths.get(dataDir(root)))) {
       // nothing ever (successfully) written — e.g. every attempt so far
@@ -250,9 +248,7 @@ object ManifestSink {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DataSchema)
     } else {
-      val side =
-        if (committed.count() <= broadcastKeyLimit) broadcast(committed)
-        else committed.hint("SHUFFLE_HASH")
+      val side = Joins.keySide(committed, committed.count())
       // explicit schema: a dataDir whose files were all garbage-collected
       // (dirs remain) must read as empty, not fail schema inference
       spark.read.schema(DataSchema).parquet(dataDir(root))
@@ -489,26 +485,21 @@ object ManifestSink {
       deadSeq: Seq[String]): Int = {
     var dataFiles = 0
     if (deadSeq.nonEmpty && Files.isDirectory(Paths.get(dataDir(root)))) {
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
       // explicit schema: no inference, so a dataDir holding only
       // _temporary residue (or nothing — GC is idempotent and the dead
       // set never shrinks, error reports being permanent) reads as empty
-      // instead of throwing
-      val df0 = spark.read.schema(DataSchema).parquet(dataDir(root))
-      // same size guard as committedManifest: the errored-id set grows
-      // without bound over a sink's lifetime, and an In-literal over
-      // thousands of ids is a plan-size killer
-      val matched =
-        if (deadSeq.size <= IsinRunLimit) df0.filter(col("run_id").isin(deadSeq: _*))
-        else {
-          import spark.implicits._
-          df0.join(broadcast(deadSeq.toDF("run_id")), Seq("run_id"), "left_semi")
-        }
-      val files = matched.select(input_file_name()).distinct().collect()
+      // instead of throwing. The dead-id set grows without bound over a
+      // sink's lifetime, hence the size-guarded filterRuns. The file path
+      // comes from the `_metadata` column, not input_file_name(): it is a
+      // plain scan column, so it survives the shuffle a SHUFFLE_HASH
+      // semi-join adds (input_file_name() reads "" past an exchange).
+      val scan = spark.read.schema(DataSchema).parquet(dataDir(root))
+        .select(col("run_id"), col("_metadata.file_path").as("file"))
+      val files = filterRuns(scan, deadSeq).select("file").distinct().collect()
         .map(_.getString(0))
       files.foreach { f =>
-        // Spark 4's input_file_name returns a URI form (URL-encoded);
-        // decode through java.net.URI so escapable path chars resolve
+        // the file path is a URI form (URL-encoded); decode through
+        // java.net.URI so escapable path chars resolve
         val p =
           try java.nio.file.Paths.get(new java.net.URI(f))
           catch { case _: Exception => Paths.get(f.stripPrefix("file:")) }

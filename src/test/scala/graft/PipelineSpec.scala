@@ -314,7 +314,6 @@ class PipelineSpec extends AnyFunSuite {
       maxPartitionsPerRun = c.getAs[Long]("max_partitions_per_run").toInt,
       partPrefix = c.getAs[String]("part_prefix"),
       parquetCodec = c.getAs[String]("parquet_codec"),
-      broadcastKeyLimit = c.getAs[Long]("broadcast_key_limit"),
       strictResume = c.getAs[Boolean]("strict_resume"),
       reorgBuffer = c.getAs[Long]("reorg_buffer"))
     val again = EncodePipeline.run(spark, tokens, cfg2)

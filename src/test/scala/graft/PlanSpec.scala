@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Plan-quality assertions (the "is this the plan you'd want at 100 TB"
   * checks): filters and projections must reach the parquet scan, small
@@ -43,51 +44,51 @@ class PlanSpec extends AnyFunSuite {
     assert(simple.contains("*(1) Project"), simple)
   }
 
-  test("resume anti-join: broadcast under the key limit, shuffle join past it") {
+  test("resume anti-join broadcasts a small committed-key set") {
     val tokens = graft.sources.Tokens.synthetic(spark, 100)
     val out = java.nio.file.Files.createTempDirectory("graft-plan").toString
     val cfg = graft.pipeline.EncodePipeline.Config(outDir = out, targetBinTokens = 4096)
     graft.pipeline.EncodePipeline.run(spark, tokens, cfg)
-    val committed = graft.sinks.ManifestSink.committedManifest(spark, out)
-      .select("part_key").distinct()
-    val n = committed.count()
-    val planned = graft.pipeline.EncodePipeline.plan(tokens, cfg)
-    // small committed set → broadcast
-    val small = formatted(graft.pipeline.EncodePipeline.resumeAntiJoin(
-      planned, committed, n, limit = 1L << 20))
-    assert(small.contains("BroadcastHashJoin") || small.contains("BroadcastNestedLoopJoin"), small)
-    assert(small.contains("LeftAnti"), small)
-    // past the limit (simulated with limit=0) → no broadcast of the
-    // committed side; a shuffle-based anti-join instead
-    val big = formatted(graft.pipeline.EncodePipeline.resumeAntiJoin(
-      planned, committed, n, limit = 0))
-    assert(big.contains("LeftAnti"), big)
-    assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"), big)
+    // the resumed run plans its anti-join inside run(): capture the plans
+    // of the queries it executes (past Joins.BroadcastRows the committed
+    // side is hashed instead — JoinsSpec drives keySide past the limit)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val again = graft.pipeline.EncodePipeline.run(spark, tokens, cfg)
+      assert(again.committed == 0 && again.skipped == again.planned)
+      // physical anti-join nodes ("<Strategy>Join [keys], [keys], LeftAnti, …";
+      // AQE's logical stages print "Join LeftAnti, …"); listener events
+      // arrive asynchronously
+      def anti = plans.asScala.toSeq.flatMap(_.split("\n"))
+        .filter(l => l.contains("Join [") && l.contains("LeftAnti"))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (anti.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(anti.nonEmpty, plans.asScala.mkString("\n\n"))
+      assert(anti.forall(_.contains("BroadcastHashJoin")), anti.mkString("\n"))
+    } finally spark.listenerManager.unregister(listener)
   }
 
-  test("snapshot reader: broadcast under the key limit, hashed shuffle past it, never SMJ") {
+  test("snapshot reader broadcasts a small committed-key set; few runs filter by isin") {
     val tokens = graft.sources.Tokens.synthetic(spark, 150)
     val out = java.nio.file.Files.createTempDirectory("graft-plan-read").toString
     graft.pipeline.EncodePipeline.run(spark, tokens,
       graft.pipeline.EncodePipeline.Config(outDir = out, targetBinTokens = 4096))
-    // small committed-key set → broadcast semi-join
+    // small committed-key set → broadcast semi-join (past Joins.BroadcastRows
+    // the side is a shuffled HASH join, never an SMJ — JoinsSpec)
     val small = formatted(graft.sinks.ManifestSink.readCommitted(spark, out))
     assert(small.contains("BroadcastHashJoin"), small)
     assert(small.contains("LeftSemi"), small)
-    // past the limit (simulated with limit=0): shuffled HASH join — an SMJ
-    // here would sort the heavy blob side (the documented 4× regression)
-    val big = formatted(
-      graft.sinks.ManifestSink.readCommitted(spark, out, broadcastKeyLimit = 0))
-    assert(big.contains("ShuffledHashJoin"), big)
-    assert(big.contains("LeftSemi"), big)
-    assert(!big.contains("SortMergeJoin"), big)
-    // run filter: a static isin literal for few runs (no join in the plan),
-    // a semi-join against the runs table past the run limit
+    // run filter: a static isin literal for few runs, no join in the plan
+    // (past IsinRunLimit runs a semi-join — JoinsSpec)
     val isin = formatted(graft.sinks.ManifestSink.committedManifest(spark, out))
     assert(!isin.contains("Join"), isin)
-    val joined = formatted(
-      graft.sinks.ManifestSink.committedManifest(spark, out, isinRunLimit = 0))
-    assert(joined.contains("LeftSemi") && joined.contains("BroadcastHashJoin"), joined)
   }
 
   test("encode join hashes the metadata side and never sorts the arrays") {
@@ -136,6 +137,12 @@ class PlanSpec extends AnyFunSuite {
     val candPlan = graft.ops.Dedup.minhashCandidatesFromSig(sig)
       .queryExecution.executedPlan.toString
     assert("Window".r.findAllIn(candPlan).length == 1, candPlan)
+  }
+
+  test("ngram_jaccard hashes its corpus-sized self-join, never broadcasts it") {
+    val plan = formatted(SparkEntry.queries("ngram_jaccard")(spark, dir))
+    assert(plan.contains("ShuffledHashJoin"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("ivf assignment broadcasts the centroid model") {
